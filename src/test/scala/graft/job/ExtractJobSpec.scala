@@ -1,6 +1,7 @@
 package graft.job
 
 import java.nio.file.Files
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,6 +19,15 @@ class ExtractJobSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Every row of table `name` under `dir` without the `drop` columns, as
+    * JSON over sorted column names, sorted: equal lists are equal row
+    * multisets. */
+  private def table(dir: String, name: String, drop: String*): Seq[String] = {
+    val d = spark.read.parquet(s"$dir/$name").drop(drop: _*)
+    d.select(to_json(struct(d.columns.sorted.toSeq.map(col): _*)))
+      .collect().map(_.getString(0)).toSeq.sorted
+  }
 
   test("generator is deterministic and distributed") {
     val a = Transcripts.generate(spark, 50).collect().sortBy(t => (t.conv_id, t.turn_idx))
@@ -282,6 +292,83 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(n == distinct, s"duplicate metric rows after resume: $n vs $distinct")
     val totals = metrics.agg(sum("rows_out")).collect().head
     assert(totals.getLong(0) == turns.count())
+  }
+
+  test("extractOne: null text extracts as empty text, null ts as no date, on both tool paths") {
+    val ts0 = new java.sql.Timestamp(Transcripts.EpochStart * 1000L)
+    val html = "<html><head><title>Page</title></head><body>" +
+      "<p>A paragraph long enough to become a chunk of its own.</p></body></html>"
+    Seq("render", "browser").foreach { tool =>
+      val t = Turn("c", 0, "tool", html, tool, ts0)
+      val noText = ExtractJob.extractOne(t.copy(text = null))
+      assert(noText == ExtractJob.extractOne(t.copy(text = "")), tool)
+      assert(noText.n_chunks == 0 && ExtractJob.chunksFor("c#0", null, tool).isEmpty, tool)
+      val noTs = ExtractJob.extractOne(t.copy(ts = null))
+      assert(noTs == ExtractJob.extractOne(t).copy(ts = null, updated = ""), tool)
+    }
+  }
+
+  test("run: rows with a null text or ts are written as page rows like any other") {
+    import spark.implicits._
+    val ts0 = new java.sql.Timestamp(Transcripts.EpochStart * 1000L)
+    val html = "<html><body><p>A paragraph long enough to become a chunk.</p></body></html>"
+    val rows = Seq("render", "browser").flatMap { tool =>
+      val t = Turn(s"nulls-$tool", 0, "tool", html, tool, ts0)
+      Seq(t, t.copy(turn_idx = 1, text = null), t.copy(turn_idx = 2, ts = null))
+    }
+    val dir = Files.createTempDirectory("graft-nulls").toString
+    ExtractJob.run(rows.toDS(), ExtractJob.Config(dir, buckets = 4, groups = 2, runId = "n"))
+    val pages = ExtractJob.readPages(spark, dir).drop("conv_bucket").as[ExtractedTurn]
+      .collect().sortBy(p => (p.conv_id, p.turn_idx)).toSeq
+    val expected = rows.map(t => ExtractJob.extractOne(t).copy(turn_pos = t.turn_idx + 1L))
+      .sortBy(p => (p.conv_id, p.turn_idx))
+    assert(pages == expected)
+    assert(ExtractJob.readChunks(spark, dir).count() == expected.map(_.n_chunks).sum)
+  }
+
+  test("pipelined run: output is identical for 1, 4 and 8 groups") {
+    val turns = Transcripts.generate(spark, 40)
+    val dirs = Seq(1, 4, 8).map { groups =>
+      val dir = Files.createTempDirectory(s"graft-groups-$groups").toString
+      ExtractJob.run(turns, ExtractJob.Config(dir, buckets = 8, groups = groups, runId = "p"))
+      dir
+    }
+    dirs.tail.foreach { d =>
+      Seq("pages", "chunks").foreach(t => assert(table(d, t) == table(dirs.head, t), s"$t of $d"))
+      assert(table(d, "metrics", "group_id") == table(dirs.head, "metrics", "group_id"), d)
+    }
+    dirs.foreach { d =>
+      val done = spark.read.parquet(s"$d/lineage").filter(col("status") === "done")
+        .groupBy("conv_bucket").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      assert(done == (0 until 8).map(_ -> 1L).toMap, d)
+    }
+    assert(ExtractJob.readPages(spark, dirs.head).count() == Transcripts.expectedCount(40))
+  }
+
+  test("pipelined run: a failing group stops the run and a resume completes it") {
+    import spark.implicits._
+    val turns = Transcripts.generate(spark, 60)
+    def cfg(dir: String) = ExtractJob.Config(dir, buckets = 8, groups = 4, runId = "f")
+    // group 2 of 4 holds buckets 4 and 5; one of its conversations throws
+    val bad = turns.filter(ExtractJob.bucketOf(8) === 4).select("conv_id").as[String].head()
+    val boom = udf { (c: String, text: String) =>
+      if (c == bad) throw new IllegalStateException("injected failure") else text }
+    val failing = turns.withColumn("text", boom($"conv_id", $"text")).as[Turn]
+    val dir = Files.createTempDirectory("graft-fail").toString
+    val e = intercept[Exception](ExtractJob.run(failing, cfg(dir)))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("injected failure")), e)
+    ListenerBusDrain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    val done = spark.read.parquet(s"$dir/lineage").filter(col("status") === "done")
+      .select("group_id", "conv_bucket").as[(Int, Int)].collect().toSet
+    assert(done == (0 until 4).map(b => (b / 2, b)).toSet)
+
+    ExtractJob.run(turns, cfg(dir))
+    val clean = Files.createTempDirectory("graft-fail-clean").toString
+    ExtractJob.run(turns, cfg(clean))
+    Seq("pages", "chunks", "metrics").foreach(t => assert(table(dir, t) == table(clean, t), t))
+    assert(ExtractJob.completedBuckets(spark, dir) == (0 until 8).toSet)
   }
 
   test("per-turn recipe fixture end-to-end via Spark row") {
