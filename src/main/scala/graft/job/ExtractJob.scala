@@ -13,13 +13,14 @@ import graft.model._
 /** The flagship batch job: transcripts → extracted turns + chunk table +
   * metrics + lineage, checkpoint-resumable per conv-bucket.
   *
-  * Spark shape (SURVEY.md §3.1): scan → [optional salted repartition] →
-  * typed `mapPartitions` extraction (zero-shuffle, row-local) → stable-order
-  * window over (conv_id, turn_idx, ts) on the *compressed* post-extraction
-  * rows (the reference measures ~18× HTML→JSON shrinkage, README.md:93-97,
-  * so windowing after extraction shuffles an order of magnitude less data
-  * than windowing the raw input) → dynamic-partition-overwrite write keyed
-  * by `conv_bucket`, with a lineage row per completed bucket.
+  * Spark shape (SURVEY.md §3.1): scan → typed `mapPartitions` extraction
+  * (zero-shuffle, row-local) → stable-order window over (conv_id,
+  * turn_idx, ts) on the *compressed* post-extraction rows (the reference
+  * measures ~18× HTML→JSON shrinkage, README.md:93-97, so windowing after
+  * extraction shuffles an order of magnitude less data than windowing the
+  * raw input) → dynamic-partition-overwrite parquet writes keyed by
+  * `conv_bucket`, with a lineage row per completed bucket. Every table is
+  * parquet: resume ([[completedBuckets]]) and the readers assume it.
   *
   * [[run]] splits the buckets into `Config.groups` groups and keeps two
   * groups in flight: while one group writes, the next extracts, so the
@@ -41,17 +42,7 @@ object ExtractJob {
         * then lineage, and lineage is appended in group order. Peak cache
         * is two groups' extracted rows. */
       groups: Int = 4,
-      runId: String = "run",
-      /** salt partitions for conv-clustered inputs; None = keep scan
-        * partitioning (extraction is row-local, so a balanced byte-split
-        * scan needs no shuffle). */
-      saltPartitions: Option[Int] = None,
-      saltBuckets: Int = 16,
-      /** storage-format seam: no Iceberg runtime jar ships in this
-        * container, so output tables are partitioned parquet with the same
-        * schema; `format = "iceberg"` is the one-line swap once the jar is
-        * present (MERGE INTO then replaces the dynamic-overwrite idiom). */
-      format: String = "parquet")
+      runId: String = "run")
 
   private val isoFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ssxxx")
     .withZone(ZoneOffset.UTC)
@@ -175,8 +166,9 @@ object ExtractJob {
 
   /** J8 skew mitigation: spread one conversation's turns across partitions
     * with a salted key (extraction is row-local, so this is safe; only the
-    * ordering window needs conv locality). Use when the input layout is
-    * conv-clustered. */
+    * ordering window needs conv locality). [[run]] keeps the scan's
+    * partitioning, so a caller whose input is conv-clustered passes
+    * `saltedByConv(turns, p, s)` into `run` instead of `turns`. */
   def saltedByConv(turns: Dataset[Turn], partitions: Int, saltBuckets: Int): Dataset[Turn] =
     turns.repartition(partitions, col("conv_id"),
       pmod(hash(col("turn_idx")), lit(saltBuckets)))
@@ -322,7 +314,7 @@ object ExtractJob {
           groupBuckets.filterNot(b => metricRows.exists(_.conv_bucket == b))
             .map(b => LineageRow(cfg.runId, g, b, "done", 0L)) // empty buckets
         spark.createDataset(lineageRows).write.mode(SaveMode.Append)
-          .format(cfg.format).save(s"${cfg.outDir}/lineage")
+          .parquet(s"${cfg.outDir}/lineage")
         written += metricRows.map(_.rows_out).sum
       } catch { case e: Throwable =>
         stopped.set(true)
@@ -347,11 +339,7 @@ object ExtractJob {
     // re-extracted (the whole point of per-partition lineage)
     val slice = turns.filter(bucketOf(cfg.buckets).isin(groupBuckets: _*))
       .as[Turn]
-    val salted = cfg.saltPartitions match {
-      case Some(p) => saltedByConv(slice, p, cfg.saltBuckets)
-      case None => slice
-    }
-    val part = withTurnPos(extract(salted))
+    val part = withTurnPos(extract(slice))
       .withColumn("conv_bucket", bucketOf(cfg.buckets))
       .cache()
     try {
@@ -359,7 +347,7 @@ object ExtractJob {
       part.write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("conv_bucket")
-        .format(cfg.format).save(s"${cfg.outDir}/pages")
+        .parquet(s"${cfg.outDir}/pages")
       // chunks table (exploded, flat — the reference's chunk store)
       part.select($"conv_id", $"turn_idx", $"turn_pos", $"url", $"page_id",
           $"title", $"ts", $"conv_bucket", explode($"chunks").as("c"))
@@ -369,7 +357,7 @@ object ExtractJob {
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("conv_bucket")
-        .format(cfg.format).save(s"${cfg.outDir}/chunks")
+        .parquet(s"${cfg.outDir}/chunks")
       // metrics side table (exact, aggregated from output columns)
       val metrics = part.groupBy($"conv_bucket").agg(
           count(lit(1)).as("rows"), sum($"bytes_in").as("bytes_in"),
@@ -390,7 +378,7 @@ object ExtractJob {
       spark.createDataset(metricRows).write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("run_id", "group_id")
-        .format(cfg.format).save(s"${cfg.outDir}/metrics")
+        .parquet(s"${cfg.outDir}/metrics")
       metricRows
     } finally part.unpersist()
   }

@@ -44,20 +44,7 @@ object Dedup {
     * to the corpus) so shingling runs once, not three times. */
   def minHashPairs(docs: DataFrame, n: Int = 3, k: Int = 16, bands: Int = 4,
       minEstJaccardX1000: Int = 500, maxDf: Option[Long] = None,
-      portable: Boolean = false, maxDfPct: Option[Int] = None): DataFrame =
-    minHashPairsPlanned(docs, n, k, bands, minEstJaccardX1000, maxDf,
-      portable, maxDfPct) match { case (frame, sigs) =>
-        try frame.localCheckpoint(true) finally sigs.unpersist()
-      }
-
-  /** [[minHashPairs]] WITHOUT the final eager checkpoint, plus the live
-    * signature cache handle — dev/plan-inspection seam (the checkpointed
-    * public result hides the interesting physical plan behind a Scan
-    * ExistingRDD). Caller owns the returned cache's lifecycle. */
-  private[graft] def minHashPairsPlanned(docs: DataFrame, n: Int = 3,
-      k: Int = 16, bands: Int = 4, minEstJaccardX1000: Int = 500,
-      maxDf: Option[Long] = None, portable: Boolean = false,
-      maxDfPct: Option[Int] = None): (DataFrame, DataFrame) = {
+      portable: Boolean = false, maxDfPct: Option[Int] = None): DataFrame = {
     require(k % bands == 0, "k must be divisible by bands")
     val r = k / bands
     // persisted, reused three times (band explode + both candidate joins);
@@ -67,7 +54,7 @@ object Dedup {
     val sigs = minHashSignatures(docs, n, k, maxDf, portable, maxDfPct)
       .select(col("doc_id"), array((0 until k).map(j => col(s"mh$j")): _*).as("sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val frame = {
+    try {
       def bandKey(b: Int): Column = {
         val parts = (b * r until (b + 1) * r).map(j => element_at(col("sig"), j + 1))
         if (portable) substring(md5(concat_ws(",", parts: _*)), 1, 16)
@@ -91,8 +78,8 @@ object Dedup {
         .select(col("doc_a"), col("doc_b"),
           (agree * 1000 / k).cast("long").as("est_jaccard_x1000"))
         .filter(col("est_jaccard_x1000") >= minEstJaccardX1000)
-    }
-    (frame, sigs)
+        .localCheckpoint(true)
+    } finally sigs.unpersist()
   }
 
   /** Connected components over a near-dup pair set — the step that turns
@@ -103,23 +90,16 @@ object Dedup {
     * (doc_id, cluster_id) for every doc that appears in a pair, with
     * cluster_id = min doc_id of its component.
     *
-    * Default algorithm: alternating large-star/small-star contraction
-    * ([[connectedComponentsStar]]) — round count is O(log n) in the
-    * largest component size, INDEPENDENT of its diameter, so a
-    * chain-shaped family (a document edited iteratively d times) costs
-    * ~2·log₂ d rounds instead of the d+1 that level-synchronous label
-    * propagation ([[connectedComponentsMinLabel]]) needs. On the
-    * shallow fan/template graphs near-dup corpora usually produce, both
-    * run 3-5 rounds and measure within noise of each other (see
-    * NOTES.md round-5 CCBench numbers), so the diameter-robust one is
-    * the default; the min-label path stays available for callers that
-    * know their components are shallow. */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame =
-    connectedComponentsStar(pairs, maxIters)
-
-  /** Alternating large-star / small-star contraction (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", ACM SoCC 2014; the
-    * same public algorithm family behind GraphFrames' default CC).
+    * Algorithm: alternating large-star / small-star contraction (Kiveris
+    * et al., "Connected Components in MapReduce and Beyond", ACM SoCC
+    * 2014; the same public algorithm family behind GraphFrames' default
+    * CC). Its round count is O(log n) in the largest component size,
+    * INDEPENDENT of its diameter, so a chain-shaped family (a document
+    * edited iteratively d times) costs ~2·log₂ d rounds instead of the
+    * d+1 that level-synchronous min-label propagation needs. Star was
+    * 2.8× faster than min-label on a 241k-pair near-dup graph and within
+    * ~0.5 s of it on a 256-pair fan graph (NOTES.md, round 5), so it is
+    * the only algorithm kept.
     * Round shape: each round is two edge rewrites over the canonical
     * (big, small) edge set —
     *
@@ -133,14 +113,15 @@ object Dedup {
     * set monotonically contracts toward disjoint stars centered at each
     * component's minimum id; convergence = edge-set fixpoint, detected
     * distributed (count + except-limit-1, no collect). A depth-200
-    * chain converges in ~14 rounds (pinned in OpsSpec); 10⁵-node chains
-    * in ~2·17 (see ScaleSmoke). Non-convergence within `maxIters`
-    * fails loudly — truncated contraction would return wrong labels. */
-  def connectedComponentsStar(pairs: DataFrame, maxIters: Int = 50): DataFrame =
+    * chain converges in ~14 rounds (pinned in OpsSpec); a 10⁵-node chain
+    * took ~2·17 (NOTES.md, round-3 scale smoke). Non-convergence within
+    * `maxIters` fails loudly — truncated contraction would return wrong
+    * labels. */
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame =
     starRounds(pairs, maxIters)._1
 
-  /** [[connectedComponentsStar]] plus the round count it took (for tests
-    * and smoke stages that pin the O(log n) convergence bound). */
+  /** [[connectedComponents]] plus the round count it took (for the test
+    * that pins the O(log n) convergence bound). */
   private[graft] def starRounds(pairs: DataFrame, maxIters: Int)
       : (DataFrame, Int) = {
     val nodes = pairs.select(col("doc_a").as("doc_id"))
@@ -161,7 +142,7 @@ object Dedup {
       rounds += 1
       if (rounds > maxIters)
         throw new IllegalStateException(
-          s"connectedComponentsStar did not converge within $maxIters rounds; " +
+          s"connectedComponents did not converge within $maxIters rounds; " +
             "star contraction needs ~2·log2(component size) rounds — raise maxIters")
       val next = starRound(cur).localCheckpoint(false)
       // exact fixpoint test: both sides are distinct sets, so equal
@@ -184,9 +165,9 @@ object Dedup {
     (labels, rounds)
   }
 
-  /** One contraction round — the per-iteration plan unit (exposed for
-    * plan inspection; see plans/r07/inner_cc_round_*.txt). */
-  private[graft] def starRound(edges: DataFrame): DataFrame =
+  /** One contraction round — the per-iteration plan unit (its plan is in
+    * plans/r07/inner_cc_round_*.txt). */
+  private def starRound(edges: DataFrame): DataFrame =
     smallStar(largeStar(edges))
 
   /** Large-star rewrite: for each node u (over symmetrized edges), emit
@@ -235,90 +216,6 @@ object Dedup {
         .otherwise(array(center))).as("e"))
       .select(col("e.big").as("big"), col("e.small").as("small"))
       .distinct()
-  }
-
-  /** Level-synchronous min-label propagation, like
-    * [[graft.job.Crawl.bfs]]: each iteration joins the (symmetrized)
-    * edges against current labels, takes the min label per node, and
-    * localCheckpoints so the iterative lineage stays flat. Iteration
-    * count = cluster diameter + 1 — fine for the shallow replica-fan
-    * graphs near-dup corpora usually produce, pathological for
-    * chain-shaped families (use [[connectedComponentsStar]], the
-    * default). The per-round shuffle carries only (node, label) longs;
-    * convergence is detected distributed (one `limit(1).count()` on the
-    * changed set — no label collect). */
-  def connectedComponentsMinLabel(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var labels = edges.select(col("src").as("doc_id")).distinct()
-        .select(col("doc_id"), col("doc_id").as("cluster_id"))
-        .localCheckpoint(true)
-      // superseded label generations are freed EXPLICITLY: non-checkpoint
-      // rounds persist + materialize, and the previous cached generation
-      // is unpersisted once the next one exists — storage stays bounded
-      // at ~two generations instead of one (doc_id, cluster_id) copy per
-      // round awaiting GC. Every 5th round localCheckpoints instead,
-      // truncating the cached-plan lineage chain (the classic
-      // iterative-Spark plan-growth failure mode).
-      var prevCached: Option[DataFrame] = None
-      var converged = false
-      var it = 0
-      try {
-      while (!converged) {
-        it += 1
-        if (it > maxIters)
-          // a silently truncated propagation would return WRONG labels
-          // (one real component split into several) — fail loudly instead.
-          // Convergence costs eccentricity + 1 rounds (the last round only
-          // CONFIRMS no label moved), so size maxIters to the largest
-          // expected component diameter plus one
-          throw new IllegalStateException(
-            s"connectedComponentsMinLabel did not converge within $maxIters rounds; " +
-              "convergence needs component-diameter + 1 rounds — raise maxIters")
-        val propagated = edges
-          .join(labels, edges("src") === labels("doc_id"))
-          .select(col("dst").as("doc_id"), col("cluster_id"))
-          .unionByName(labels)
-          .groupBy("doc_id").agg(min("cluster_id").as("cluster_id"))
-        val checkpointRound = it % 5 == 0
-        val next =
-          if (checkpointRound) propagated.localCheckpoint(true)
-          else {
-            val c = propagated.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            c.count() // materialize before the previous generation is freed
-            c
-          }
-        converged = next.as("a")
-          .join(labels.as("b"), col("a.doc_id") === col("b.doc_id"))
-          .filter(col("a.cluster_id") =!= col("b.cluster_id"))
-          .limit(1)
-          .isEmpty
-        prevCached.foreach(_.unpersist())
-        prevCached = if (checkpointRound) None else Some(next)
-        labels = next
-      }
-      // never hand a cached frame to the caller (the operator owns its
-      // cache lifecycle — see ngramJaccardPairs): checkpoint the final
-      // generation and release the cache entry
-      prevCached match {
-        case Some(cached) =>
-          val result = labels.localCheckpoint(true)
-          cached.unpersist()
-          result
-        case None => labels
-      }
-      } catch {
-        case t: Throwable =>
-          // the failure path must release the in-flight cached generation
-          // too — a thrown IllegalStateException (non-convergence) or a
-          // job failure must not leave blocks pinned in the cacheManager
-          prevCached.foreach(_.unpersist())
-          throw t
-      }
-    } finally edges.unpersist()
   }
 
   /** [[connectedComponents]] over [[minHashPairs]], labeling EVERY

@@ -25,6 +25,17 @@ object TextOps {
     ((length(text) - length(regexp_replace(text, java.util.regex.Pattern.quote(term), "")))
       / term.length).cast("int")
 
+  /** Mean word length ×100, integer-truncated, from a char count and a
+    * [[wordCount]]. */
+  def meanWordLenX100(nChars: Column, nWords: Column): Column =
+    (nChars * 100L / greatest(nWords, lit(1))).cast("long")
+
+  /** Quality gate: at least 5 words with a mean word length of 2–12
+    * characters. Takes the counts as columns so a caller that already
+    * projected them does not recompute them. */
+  def isQuality(nWords: Column, meanWordLenX100: Column): Column =
+    (nWords >= 5) && (meanWordLenX100 between (200L, 1200L))
+
   /** doc_id, n_chars, n_words, n_tokens, n_punct, stop_hits, quality flags.
     * Quality scoring per the reference's "content appears real" noise check
     * spirit (`/root/reference/validator/checks.py:401-439`): all components
@@ -39,29 +50,34 @@ object TextOps {
       tokenCount(col("text")).as("n_tokens"),
       size(regexp_extract_all(col("text"), lit("[.!?,;:]"), lit(0))).as("n_punct"),
       stopHits.as("stop_hits"))
-      .withColumn("mean_word_len_x100",
-        (col("n_chars") * 100L / greatest(col("n_words"), lit(1))).cast("long"))
-      .withColumn("is_quality",
-        (col("n_words") >= 5) && (col("mean_word_len_x100") between (200L, 1200L)))
+      .withColumn("mean_word_len_x100", meanWordLenX100(col("n_chars"), col("n_words")))
+      .withColumn("is_quality", isQuality(col("n_words"), col("mean_word_len_x100")))
   }
 
-  /** Heuristic language ID via function-word hits (n-gram heuristic class;
-    * deterministic tie-break by priority order en>fr>es>de>zh). */
-  def langId(docs: DataFrame): DataFrame = {
+  /** Function-word hits per language, in the order en, fr, es, de. */
+  def langHits(text: Column): (Column, Column, Column, Column) = {
     def hits(words: Seq[String]): Column =
-      words.map(w => occurrences(lower(col("text")), s" $w ")).reduce(_ + _)
-    val en = hits(Seq("the", "and", "of"))
-    val fr = hits(Seq("le", "la", "et", "les"))
-    val es = hits(Seq("el", "los", "que", "y"))
-    val de = hits(Seq("der", "die", "und", "das"))
+      words.map(w => occurrences(lower(text), s" $w ")).reduce(_ + _)
+    (hits(Seq("the", "and", "of")), hits(Seq("le", "la", "et", "les")),
+      hits(Seq("el", "los", "que", "y")), hits(Seq("der", "die", "und", "das")))
+  }
+
+  /** The language with the most hits; ties go to the earlier of
+    * en > fr > es > de. */
+  def langPred(en: Column, fr: Column, es: Column, de: Column): Column =
+    when(en >= fr && en >= es && en >= de, "en")
+      .when(fr >= es && fr >= de, "fr")
+      .when(es >= de, "es")
+      .otherwise("de")
+
+  /** Heuristic language ID via function-word hits (n-gram heuristic class;
+    * deterministic tie-break, see [[langPred]]). */
+  def langId(docs: DataFrame): DataFrame = {
+    val (en, fr, es, de) = langHits(col("text"))
     docs.select(col("doc_id"), col("lang"), en.as("en_hits"), fr.as("fr_hits"),
         es.as("es_hits"), de.as("de_hits"))
-      .withColumn("lang_pred",
-        when(col("en_hits") >= col("fr_hits") && col("en_hits") >= col("es_hits")
-          && col("en_hits") >= col("de_hits"), "en")
-        .when(col("fr_hits") >= col("es_hits") && col("fr_hits") >= col("de_hits"), "fr")
-        .when(col("es_hits") >= col("de_hits"), "es")
-        .otherwise("de"))
+      .withColumn("lang_pred", langPred(col("en_hits"), col("fr_hits"),
+        col("es_hits"), col("de_hits")))
   }
 
   /** Exact dedup: canonical = min doc_id per md5(normalized text). The
@@ -199,8 +215,8 @@ object TextOps {
     * form paid n interpreted `element_at` dispatches plus a materialized
     * index array per shingle. The closure builds each shingle in one
     * pass over the words array — measured 28% faster on the shingle map
-    * stage (tools/R07Shingle), with multiset-identical output proven on
-    * the full bench corpus and pinned by an OpsSpec fuzz against the old
+    * stage, with multiset-identical output on the full bench corpus
+    * (NOTES.md, round 7), and pinned by an OpsSpec fuzz against the old
     * expression. The `when` guard keeps the exact legacy semantics for
     * NULL (`size(NULL)` is NULL → empty array) and shorter-than-n docs. */
   def wordNgramsFromWords(words: Column, n: Int): Column =
@@ -208,18 +224,24 @@ object TextOps {
       .otherwise(array().cast("array<string>"))
 
   /** Space-joins each window of n consecutive words; called only with
-    * size(words) >= n (see the guard above). Word arrays come from
-    * `split`, which never yields null elements. */
+    * size(words) >= n (see the guard above). Joins exactly as
+    * `concat_ws(" ", ...)` does: a null word is skipped along with its
+    * separator, an empty word is kept. */
   private val ngramJoinUdf =
     org.apache.spark.sql.functions.udf { (ws: Seq[String], n: Int) =>
       val out = new Array[String](ws.length - n + 1)
       var i = 0
       while (i < out.length) {
         val sb = new java.lang.StringBuilder
+        var first = true
         var j = 0
         while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(ws(i + j))
+          val w = ws(i + j)
+          if (w != null) {
+            if (!first) sb.append(' ')
+            sb.append(w)
+            first = false
+          }
           j += 1
         }
         out(i) = sb.toString

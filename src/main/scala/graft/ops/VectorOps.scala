@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * CodegenFallback (interpreted lambdas), but a closure/UDF form is NOT
   * faster here: the per-call Catalyst→Scala array conversion costs more
   * than the interpreted per-element multiply it saves (measured 2.3×
-  * SLOWER in the 16-centroid IVF shape, tools/R07Dot) — so the
+  * SLOWER in the 16-centroid IVF shape; NOTES.md, round 7) — so the
   * optimization lever for this family is the aggregate CALL COUNT, not
   * the per-call form (see the redundancy-free building blocks below).
   */

@@ -544,29 +544,14 @@ object Queries {
     Some("""SELECT l_orderkey, count(*) AS n_items FROM lineitem
       GROUP BY l_orderkey ORDER BY l_orderkey LIMIT 1000"""))
 
-  /** A6: the full per-endpoint rate limiter — exact `check_rate_limit`
-    * admission sequencing (rate_limiter.py:164-218) with
-    * `_get_endpoint_limit` classification (rate_limiter.py:145-162) and
-    * the X-RateLimit-Reset / retry_after math, per [[RateLimits]]. The
-    * request log is synthesized deterministically from events (20 ips ×
-    * the 5 endpoint classes; times in per-ip bands over a 1200 s burst —
-    * see [[rateLimitDecisions]] — first 40 per bucket), with per-class
-    * limits {default 4, search 2, discover 4,
-    * sync 3, webhook 1} — the reference's RATE_LIMIT_*_RPM env knobs
-    * scaled so both verdicts appear at test scale. The oracle replays the
-    * same greedy admission with a recursive CTE carrying each bucket's
-    * allowed-timestamp window, so the denial SET (not just counts) and
-    * every reset/retry_after value are checked. */
-  /** The shared a6 request synthesis + exact admission simulation —
-    * also feeds the a9 quota view. Request times land in per-ip BANDS so
+  /** The capped request log (ip, endpoint, sec, event_id, limit_rpm)
+    * shared by a6/a9/x_quota_reset. Request times land in per-ip BANDS so
     * every bucket-lifecycle verdict exists at the a9 snapshot (t = 600):
     * ips 0-2 only in [0, 250) (stale — swept before the snapshot), ips
     * 3-4 only in (600, 1101) (not yet seen), ips 5-7 in [310, 560)
     * (alive but mostly outside the 60 s count window — the live count-0
     * row), ips 8-13 in [480, 600) (alive with active counts), ips 14-19
     * across the whole [0, 1200) burst (long multi-window walks). */
-  /** The capped request log (ip, endpoint, sec, event_id, limit_rpm)
-    * shared by a6/a9/x_quota_reset. */
   private def rateLimitRequests(s: SparkSession, dir: String): DataFrame = {
       val cfg = RateLimits.Config(defaultRpm = 4, searchRpm = 2,
         discoverRpm = 4, syncRpm = 3, webhookRpm = 1)
@@ -592,16 +577,16 @@ object Queries {
         .withColumn("limit_rpm", RateLimits.endpointLimit(col("endpoint"), cfg))
   }
 
+  /** The exact admission simulation over [[rateLimitRequests]] — the a6
+    * decision log, also feeding the a9 quota view and the quota envelope.
+    * The rn window already hash-exchanged by exactly (ip, endpoint), so
+    * the planner drops simulate's own repartition: the request log
+    * shuffles once. */
   private def rateLimitDecisions(s: SparkSession, dir: String): DataFrame = {
       import s.implicits._
-      // the rn window above just hash-exchanged by exactly (ip, endpoint)
-      // and only narrow ops follow — the clustered walk skips simulate's
-      // second shuffle of the request log (one exchange instead of two)
-      RateLimits.simulateClustered(rateLimitRequests(s, dir).as[RateLimits.Req]).toDF()
+      RateLimits.simulate(rateLimitRequests(s, dir).as[RateLimits.Req]).toDF()
   }
 
-  /** The matching DuckDB decision-log SELECT (no final ORDER BY) —
-    * shared by the a6 oracle and the a9 quota-view oracle. */
   /** The DuckDB mirror of [[rateLimitRequests]]' banded synthesis
     * (`keyed` + `reqs` CTE bodies) — ONE copy, interpolated into every
     * limiter oracle so the request log can never drift between a6/a9
@@ -631,6 +616,8 @@ object Queries {
         WHERE rn <= 40
       )"""
 
+  /** The matching DuckDB decision-log SELECT (no final ORDER BY) —
+    * shared by the a6 oracle and the a9 quota-view oracle. */
   private def rateLimitDecisionsSql: String = s"""WITH RECURSIVE $rateLimitRequestsSqlCtes, lim AS (
         SELECT *, CASE WHEN contains(endpoint, '?q=') THEN 2
           WHEN contains(split_part(endpoint, '?', 1), '.well-known') THEN 4
@@ -658,36 +645,23 @@ object Queries {
         allowed, CAST(remaining AS INT) AS remaining, reset_ts, retry_after
       FROM sim"""
 
+  /** A6: the full per-endpoint rate limiter — exact `check_rate_limit`
+    * admission sequencing (rate_limiter.py:164-218) with
+    * `_get_endpoint_limit` classification (rate_limiter.py:145-162) and
+    * the X-RateLimit-Reset / retry_after math, per [[RateLimits]]. The
+    * request log is synthesized deterministically from events (20 ips ×
+    * the 5 endpoint classes; times in per-ip bands over a 1200 s burst —
+    * see [[rateLimitRequests]] — first 40 per bucket), with per-class
+    * limits {default 4, search 2, discover 4,
+    * sync 3, webhook 1} — the reference's RATE_LIMIT_*_RPM env knobs
+    * scaled so both verdicts appear at test scale. The oracle replays the
+    * same greedy admission with a recursive CTE carrying each bucket's
+    * allowed-timestamp window, so the denial SET (not just counts) and
+    * every reset/retry_after value are checked. */
   private val a6RateWindow = Q(
     (s, dir) => rateLimitDecisions(s, dir).orderBy("ip", "endpoint", "event_id"),
     Some(s"$rateLimitDecisionsSql\n      ORDER BY ip, endpoint, event_id"))
 
-  /** A9: the `/admin/quota` usage view (main.py:818-837 →
-    * `RateLimiter.get_quota`, rate_limiter.py:218-273): a point-in-time
-    * snapshot per (ip, endpoint) bucket of the ALLOWED requests still
-    * inside the trailing 60 s window (denied requests are never recorded,
-    * so they never count), the bucket's limit, remaining, and
-    * percent_used rounded to 1 decimal — composed directly on the exact
-    * admission decision log, snapshot pinned at t=600 (mid-burst, so
-    * buckets show genuine partial usage). The admin-key gate itself is
-    * the x_auth_gate shape.
-    *
-    * Bucket EXISTENCE is exact: the reference lists only buckets alive in
-    * its in-memory map — created on the first `check_rate_limit` for the
-    * (ip, endpoint) key and evicted by the periodic stale sweep
-    * (`_cleanup_stale_buckets`, rate_limiter.py:132-144), where a bucket
-    * is stale once `now - last_cleanup > 300` (is_stale,
-    * rate_limiter.py:76-78) and `last_cleanup` advances on EVERY check —
-    * allowed or denied — because `bucket.cleanup()` runs before the
-    * verdict (rate_limiter.py:185, 65-69). So a bucket appears iff its
-    * last CHECKED request is within 300 s of the snapshot, and a bucket
-    * whose first request is after the snapshot does not exist yet. One
-    * modeling choice, stated: the reference's sweep fires on a 300 s
-    * timer whose phase depends on process start, so a stale bucket can
-    * linger up to one extra interval before eviction; this view pins the
-    * deterministic fixpoint "a sweep ran immediately before the
-    * snapshot" — the only phase-independent semantics a log-derived
-    * replay can state. */
   /** The alive-bucket quota view at snapshot t = 600 (unordered) —
     * shared by a9 and the x_quota_envelope composition. */
   private def quotaView(s: SparkSession, dir: String): DataFrame = {
@@ -721,6 +695,32 @@ object Queries {
       )
       WHERE last_checked IS NOT NULL AND last_checked >= 300"""
 
+  /** A9: the `/admin/quota` usage view (main.py:818-837 →
+    * `RateLimiter.get_quota`, rate_limiter.py:218-273): a point-in-time
+    * snapshot per (ip, endpoint) bucket of the ALLOWED requests still
+    * inside the trailing 60 s window (denied requests are never recorded,
+    * so they never count), the bucket's limit, remaining, and
+    * percent_used rounded to 1 decimal — composed directly on the exact
+    * admission decision log, snapshot pinned at t=600 (mid-burst, so
+    * buckets show genuine partial usage). The admin-key gate itself is
+    * the x_auth_gate shape.
+    *
+    * Bucket EXISTENCE is exact: the reference lists only buckets alive in
+    * its in-memory map — created on the first `check_rate_limit` for the
+    * (ip, endpoint) key and evicted by the periodic stale sweep
+    * (`_cleanup_stale_buckets`, rate_limiter.py:132-144), where a bucket
+    * is stale once `now - last_cleanup > 300` (is_stale,
+    * rate_limiter.py:76-78) and `last_cleanup` advances on EVERY check —
+    * allowed or denied — because `bucket.cleanup()` runs before the
+    * verdict (rate_limiter.py:185, 65-69). So a bucket appears iff its
+    * last CHECKED request is within 300 s of the snapshot, and a bucket
+    * whose first request is after the snapshot does not exist yet. One
+    * modeling choice, stated: the reference's sweep fires on a 300 s
+    * timer whose phase depends on process start, so a stale bucket can
+    * linger up to one extra interval before eviction; this view pins the
+    * deterministic fixpoint "a sweep ran immediately before the
+    * snapshot" — the only phase-independent semantics a log-derived
+    * replay can state. */
   private val a9QuotaView = Q(
     (s, dir) => quotaView(s, dir).orderBy("ip", "endpoint"),
     Some(s"$quotaViewSql\n      ORDER BY ip, endpoint"))
@@ -1152,20 +1152,6 @@ object Queries {
         '}}}' AS quota_envelope
       FROM per_ip"""))
 
-  /** The admin-key gate for the `/admin` endpoints — `_check_admin_auth`
-    * (main.py:799-815): with no RATE_LIMIT_ADMIN_KEY configured, every
-    * admin call answers 403 "Admin endpoints are disabled" (the endpoints
-    * are switched off, regardless of credentials); with a key configured,
-    * a missing or non-`Bearer ` Authorization header answers 401 "Missing
-    * Bearer token", a Bearer token that is not exactly the key answers
-    * 403 "Invalid admin key" (`hmac.compare_digest` — semantically exact
-    * string equality; the timing property is a serving-side concern), and
-    * the exact key passes. Error bodies are FastAPI's HTTPException
-    * rendering `{"detail": message}`. The synthesis crosses configured /
-    * not with six header shapes (exact key, wrong key, absent, Basic,
-    * lowercase `bearer`, `Bearer` with no space) so every branch of the
-    * 401/403/200 matrix appears. This is the sidecar's 403-first variant
-    * next to x_auth_gate's express 401-envelope variant. */
   /** Shared builder for the sidecar's two FastAPI Bearer gates
     * (`_check_admin_auth` main.py:799-815, `_check_webhook_auth`
     * main.py:660-670): identical Bearer mechanics (`startswith("Bearer ")`,
@@ -1239,6 +1225,20 @@ object Queries {
       ORDER BY doc_id"""
     })
 
+  /** The admin-key gate for the `/admin` endpoints — `_check_admin_auth`
+    * (main.py:799-815): with no RATE_LIMIT_ADMIN_KEY configured, every
+    * admin call answers 403 "Admin endpoints are disabled" (the endpoints
+    * are switched off, regardless of credentials); with a key configured,
+    * a missing or non-`Bearer ` Authorization header answers 401 "Missing
+    * Bearer token", a Bearer token that is not exactly the key answers
+    * 403 "Invalid admin key" (`hmac.compare_digest` — semantically exact
+    * string equality; the timing property is a serving-side concern), and
+    * the exact key passes. Error bodies are FastAPI's HTTPException
+    * rendering `{"detail": message}`. The synthesis crosses configured /
+    * not with six header shapes (exact key, wrong key, absent, Basic,
+    * lowercase `bearer`, `Bearer` with no space) so every branch of the
+    * 401/403/200 matrix appears. This is the sidecar's 403-first variant
+    * next to x_auth_gate's express 401-envelope variant. */
   private val xAdminAuth = bearerGateQ(
     secret = "admin-secret-key", wrongToken = "wrong-key",
     flagName = "admin_key_configured",
@@ -1258,10 +1258,10 @@ object Queries {
     * see the cleared bucket); the result is the /admin/quota view at
     * t=600 over the reset-aware decision log, where a bucket exists iff
     * its last post-reset check is within the 300 s sweep horizon (see
-    * a9). Epochs ride the bucket key through [[RateLimits.simulate]] (a
-    * `#epoch` suffix on the endpoint — limits are classified on the clean
-    * endpoint beforehand), so the streaming partition walk is reused
-    * unchanged. */
+    * a9). Epochs ride the bucket key through the streaming partition walk
+    * ([[RateLimits.simulateClustered]]; a `#epoch` suffix on the endpoint —
+    * limits are classified on the clean endpoint beforehand), so the walk
+    * is reused unchanged. */
   private val xQuotaReset = Q(
     (s, dir) => {
       import s.implicits._
@@ -1675,48 +1675,60 @@ object Queries {
   // training-data pipeline operators (documents / embeddings)
   // ======================================================================
 
+  /** The DuckDB restatement of TextOps' per-document features over
+    * `text`: word/token counts, the quality gate, and the language-ID
+    * hit expressions with the `lang_pred` CASE. One copy, shared by the
+    * x_token_count, x_quality, x_langid and curation oracles. */
+  private object FeatureSql {
+    val nWords = """len(regexp_split_to_array(trim(text), '\s+'))"""
+    val nTokens = """len(regexp_extract_all(text, '[A-Za-z0-9_]+|[^A-Za-z0-9_\s]'))"""
+    val meanWordLenX100 = s"length(text)*100 // greatest($nWords, 1)"
+    val isQuality = s"($nWords >= 5 AND $meanWordLenX100 BETWEEN 200 AND 1200)"
+    private def occ(w: String) =
+      s"(length(lower(text)) - length(replace(lower(text), ' $w ', ''))) // ${w.length + 2}"
+    private def hits(ws: Seq[String]) = ws.map(occ).mkString("(", " + ", ")")
+    val en = hits(Seq("the", "and", "of"))
+    val fr = hits(Seq("le", "la", "et", "les"))
+    val es = hits(Seq("el", "los", "que", "y"))
+    val de = hits(Seq("der", "die", "und", "das"))
+    val langPred =
+      s"""CASE WHEN $en >= $fr AND $en >= $es AND $en >= $de THEN 'en'
+             WHEN $fr >= $es AND $fr >= $de THEN 'fr'
+             WHEN $es >= $de THEN 'es' ELSE 'de' END"""
+  }
+
   private val xTokenCount = Q(
     (s, dir) => rd(s, dir, "documents").select(col("doc_id"),
       TextOps.wordCount(col("text")).cast("long").as("n_words"),
       TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
       .orderBy("doc_id"),
-    Some("""SELECT doc_id,
-      CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_words,
-      CAST(len(regexp_extract_all(text, '[A-Za-z0-9_]+|[^A-Za-z0-9_\s]')) AS BIGINT) AS n_tokens
+    Some(s"""SELECT doc_id,
+      CAST(${FeatureSql.nWords} AS BIGINT) AS n_words,
+      CAST(${FeatureSql.nTokens} AS BIGINT) AS n_tokens
       FROM documents ORDER BY doc_id"""))
 
   private val xQuality = Q(
     (s, dir) => TextOps.qualityFeatures(rd(s, dir, "documents")).orderBy("doc_id"),
-    Some("""SELECT doc_id, CAST(length(text) AS INT) AS n_chars,
-      CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INT) AS n_words,
-      CAST(len(regexp_extract_all(text, '[A-Za-z0-9_]+|[^A-Za-z0-9_\s]')) AS INT) AS n_tokens,
+    Some(s"""SELECT doc_id, CAST(length(text) AS INT) AS n_chars,
+      CAST(${FeatureSql.nWords} AS INT) AS n_words,
+      CAST(${FeatureSql.nTokens} AS INT) AS n_tokens,
       CAST(len(regexp_extract_all(text, '[.!?,;:]')) AS INT) AS n_punct,
       CAST((length(text) - length(replace(text,' the ','')))//5
         + (length(text) - length(replace(text,' a ','')))//3
         + (length(text) - length(replace(text,' and ','')))//5
         + (length(text) - length(replace(text,' of ','')))//4
         + (length(text) - length(replace(text,' to ','')))//4 AS INT) AS stop_hits,
-      length(text)*100 // greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) AS mean_word_len_x100,
-      (len(regexp_split_to_array(trim(text), '\s+')) >= 5 AND
-       length(text)*100 // greatest(len(regexp_split_to_array(trim(text), '\s+')), 1) BETWEEN 200 AND 1200)
-        AS is_quality
+      ${FeatureSql.meanWordLenX100} AS mean_word_len_x100,
+      ${FeatureSql.isQuality} AS is_quality
       FROM documents ORDER BY doc_id"""))
 
   private val xLangId = Q(
     (s, dir) => TextOps.langId(rd(s, dir, "documents")).orderBy("doc_id"),
     Some {
-      def occ(w: String) =
-        s"(length(lower(text)) - length(replace(lower(text), ' $w ', ''))) // ${w.length + 2}"
-      def hits(ws: Seq[String]) = ws.map(occ).mkString("(", " + ", ")")
-      val en = hits(Seq("the", "and", "of"))
-      val fr = hits(Seq("le", "la", "et", "les"))
-      val es = hits(Seq("el", "los", "que", "y"))
-      val de = hits(Seq("der", "die", "und", "das"))
+      import FeatureSql._
       s"""SELECT doc_id, lang, CAST($en AS INT) AS en_hits, CAST($fr AS INT) AS fr_hits,
         CAST($es AS INT) AS es_hits, CAST($de AS INT) AS de_hits,
-        CASE WHEN $en >= $fr AND $en >= $es AND $en >= $de THEN 'en'
-             WHEN $fr >= $es AND $fr >= $de THEN 'fr'
-             WHEN $es >= $de THEN 'es' ELSE 'de' END AS lang_pred
+        $langPred AS lang_pred
         FROM documents ORDER BY doc_id"""
     })
 
@@ -1763,63 +1775,40 @@ object Queries {
       WHERE inter * 1000 // (sa.n_sh + sb.n_sh - inter) >= 200
       ORDER BY doc_a, doc_b"""))
 
-  /** Portable variant (md5-derived word hashes) so the whole simhash
-    * computation has a DuckDB oracle; the xxhash64 production path is
-    * property-tested in OpsSpec. */
-  /** Composed curation capstone — the end-to-end pipeline a training-data
-    * user actually runs: quality gate ∧ language-ID agreement ∧ exact-dedup
-    * canonical survivors, carrying token counts for budget accounting.
-    * Every stage is a pure DataFrame transform, so they compose into ONE
-    * Catalyst plan (joins co-partition on doc_id); oracle-checked
-    * end-to-end in DuckDB. */
   /** The per-row feature frame (doc_id, lang, n_tokens, is_quality,
     * lang_pred) shared by both curation capstones — quality + language-ID
     * are pure expressions, so BOTH compute in ONE scan (joining separate
     * qualityFeatures/langId frames would re-scan the corpus twice
     * more). */
   private def curationFeatured(docs: DataFrame): DataFrame = {
-    def hits(ws: Seq[String]): Column =
-      ws.map(w => TextOps.occurrences(lower(col("text")), s" $w ")).reduce(_ + _)
     val nWords = TextOps.wordCount(col("text"))
-    val meanLenX100 = (length(col("text")) * 100L / greatest(nWords, lit(1))).cast("long")
-    val isQuality = (nWords >= 5) && (meanLenX100 between (200L, 1200L))
-    val en = hits(Seq("the", "and", "of"))
-    val fr = hits(Seq("le", "la", "et", "les"))
-    val es = hits(Seq("el", "los", "que", "y"))
-    val de = hits(Seq("der", "die", "und", "das"))
-    val langPred = when(en >= fr && en >= es && en >= de, "en")
-      .when(fr >= es && fr >= de, "fr").when(es >= de, "es").otherwise("de")
+    val meanLenX100 = TextOps.meanWordLenX100(length(col("text")), nWords)
+    val (en, fr, es, de) = TextOps.langHits(col("text"))
     docs.select(col("doc_id"), col("lang"),
       TextOps.tokenCount(col("text")).cast("long").as("n_tokens"),
-      isQuality.as("is_quality"), langPred.as("lang_pred"))
+      TextOps.isQuality(nWords, meanLenX100).as("is_quality"),
+      TextOps.langPred(en, fr, es, de).as("lang_pred"))
   }
 
   /** The matching DuckDB feature CTEs (`q`, `l`) — shared by both
     * curation oracles. */
-  private def curationFeatureCtesSql: String = {
-    def occ(w: String) =
-      s"(length(lower(text)) - length(replace(lower(text), ' $w ', ''))) // ${w.length + 2}"
-    def hits(ws: Seq[String]) = ws.map(occ).mkString("(", " + ", ")")
-    val en = hits(Seq("the", "and", "of"))
-    val fr = hits(Seq("le", "la", "et", "les"))
-    val es = hits(Seq("el", "los", "que", "y"))
-    val de = hits(Seq("der", "die", "und", "das"))
+  private def curationFeatureCtesSql: String =
     s"""q AS (
         SELECT doc_id,
-          CAST(len(regexp_extract_all(text, '[A-Za-z0-9_]+|[^A-Za-z0-9_\\s]')) AS BIGINT) AS n_tokens,
-          (len(regexp_split_to_array(trim(text), '\\s+')) >= 5 AND
-           length(text)*100 // greatest(len(regexp_split_to_array(trim(text), '\\s+')), 1)
-             BETWEEN 200 AND 1200) AS is_quality
+          CAST(${FeatureSql.nTokens} AS BIGINT) AS n_tokens,
+          ${FeatureSql.isQuality} AS is_quality
         FROM documents
       ), l AS (
-        SELECT doc_id,
-          CASE WHEN $en >= $fr AND $en >= $es AND $en >= $de THEN 'en'
-               WHEN $fr >= $es AND $fr >= $de THEN 'fr'
-               WHEN $es >= $de THEN 'es' ELSE 'de' END AS lang_pred
+        SELECT doc_id, ${FeatureSql.langPred} AS lang_pred
         FROM documents
       )"""
-  }
 
+  /** Composed curation capstone — the end-to-end pipeline a training-data
+    * user actually runs: quality gate ∧ language-ID agreement ∧ exact-dedup
+    * canonical survivors, carrying token counts for budget accounting.
+    * Every stage is a pure DataFrame transform, so they compose into ONE
+    * Catalyst plan (joins co-partition on doc_id); oracle-checked
+    * end-to-end in DuckDB. */
   private val xCurationPipeline = Q(
     (s, dir) => {
       val docs = rd(s, dir, "documents")
@@ -1847,11 +1836,10 @@ object Queries {
     * directly). This closes the full pairs → clusters → selection loop
     * end-to-end in one oracle-checked query; the DuckDB mirror re-derives
     * the pair set and labels components by recursive reachability — an
-    * independent algorithm from the Spark side's iterative min-label
-    * relaxation. */
-  /** The near-dup curation pipeline, parameterized ONLY on the hash mode
-    * so the md5-portable registry query and the xxhash64 bench twin are
-    * the same code path by construction. */
+    * independent algorithm from the Spark side's star contraction.
+    * Parameterized ONLY on the hash mode, so the md5-portable registry
+    * query and the xxhash64 bench twin are the same code path by
+    * construction. */
   private def curationNeardupPipeline(s: SparkSession, dir: String,
       portable: Boolean): DataFrame = {
     val docs = rd(s, dir, "documents")
@@ -1887,6 +1875,9 @@ object Queries {
         AND q.is_quality AND l.lang_pred = d.lang
       ORDER BY d.doc_id"""))
 
+  /** Portable variant (md5-derived word hashes) so the whole simhash
+    * computation has a DuckDB oracle; the xxhash64 production path is
+    * property-tested in OpsSpec. */
   private val xSimHash = Q(
     (s, dir) => TextOps.simHashPortable(rd(s, dir, "documents")).orderBy("doc_id"),
     Some {

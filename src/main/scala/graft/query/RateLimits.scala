@@ -81,18 +81,20 @@ object RateLimits {
 
   /** [[simulate]] minus the clustering exchange — for callers whose
     * upstream plan ALREADY guarantees every (ip, endpoint) bucket lives
-    * in one partition, e.g. the rn-capped request synthesis whose
-    * row_number window just exchanged by exactly this key (narrow ops
-    * preserve it, and refining the endpoint with an epoch suffix keeps
-    * it valid: each refined bucket is a subset of its parent bucket's
-    * partition). Saves a full second shuffle of the request log — at
-    * scale the log shuffles once, not twice. The partition-local time
-    * sort still runs (the planner elides it when the inherited ordering
-    * already satisfies it). private[graft] because the clustering
-    * contract is UNCHECKED: misuse silently splits buckets across
-    * partitions and produces wrong verdicts, so each call site must
-    * prove the upstream partitioning (QueryPropertySpec pins
-    * clustered == public-path results on the window-shaped input). */
+    * in one partition. Its one caller is x_quota_reset: the rn-capped
+    * request synthesis's row_number window just exchanged by
+    * (ip, endpoint), and refining the endpoint with an epoch suffix
+    * keeps that valid (each refined bucket is a subset of its parent
+    * bucket's partition) but hides it from the planner, so [[simulate]]
+    * would shuffle the log a second time. Where the planner can see the
+    * clustering (a6/a9), it drops [[simulate]]'s repartition itself, so
+    * those use [[simulate]]. The partition-local time sort still runs
+    * (the planner elides it when the inherited ordering already
+    * satisfies it). private[graft] because the clustering contract is
+    * UNCHECKED at run time: misuse silently splits buckets across
+    * partitions and produces wrong verdicts. QueryPropertySpec pins
+    * clustered == public-path results on the window-shaped input, and
+    * PlanSpec pins x_quota_reset's plan shape. */
   private[graft] def simulateClustered(reqs: Dataset[Req]): Dataset[Decision] =
     walkClustered(reqs)
 

@@ -84,6 +84,25 @@ class OpsSpec extends AnyFunSuite {
           s"n=$n doc=${r.getLong(0)}")
       }
     }
+    // word arrays not from `split` may hold null and empty elements:
+    // concat_ws skips a null (and its separator) but keeps an empty word
+    val s = spark; import s.implicits._
+    val arrays: Seq[Seq[String]] = (1 to 100).map { _ =>
+      Seq.fill(rnd.nextInt(8))(rnd.nextInt(4) match {
+        case 0 => null
+        case 1 => ""
+        case _ => rnd.alphanumeric.take(1 + rnd.nextInt(4)).mkString
+      })
+    } ++ Seq(Seq(null), Seq(null, null, null), Seq("a", null, "b"), null)
+    val wd = arrays.zipWithIndex.map { case (a, i) => (i.toLong, a) }.toDF("id", "ws")
+    for (n <- 1 to 4) {
+      wd.select(col("id"), TextOps.wordNgramsFromWords(col("ws"), n).as("got"),
+          legacy(col("ws"), n).as("want"))
+        .collect().foreach { r =>
+          assert(r.getSeq[String](1) == r.getSeq[String](2),
+            s"n=$n words=${arrays(r.getLong(0).toInt)}")
+        }
+    }
   }
 
   test("df-capped shingles drop boilerplate from the pair join") {
@@ -275,31 +294,24 @@ class OpsSpec extends AnyFunSuite {
     // separate pair 7-9, singleton edge-less docs absent from pairs
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("doc_a", "doc_b")
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L)
-    for (algo <- Seq(Dedup.connectedComponents(_: org.apache.spark.sql.DataFrame, 50),
-        Dedup.connectedComponentsMinLabel(_: org.apache.spark.sql.DataFrame, 50))) {
-      val cc = algo(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(cc == expected)
-      // a longer path exercises multi-round behavior: min-label crosses a
-      // lineage-truncation checkpoint round (every 5th); star alternates
-      val chain = (0 until 6).map(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")
-      val cc2 = algo(chain).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(cc2.values.toSet == Set(0L) && cc2.size == 7)
-      assert(spark.sharedState.cacheManager.isEmpty,
-        "operator must release every persisted generation")
-    }
-    // an iteration cap that would truncate the contraction/propagation
-    // must fail loudly, never return partial (wrong) labels
+    val cc = Dedup.connectedComponents(pairs, 50).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cc == expected)
+    // a longer path exercises multi-round behavior: large-star and
+    // small-star alternate over several rounds
     val chain = (0 until 6).map(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")
-    for (thunk <- Seq(
-        () => Dedup.connectedComponents(chain, maxIters = 1),
-        () => Dedup.connectedComponentsMinLabel(chain, maxIters = 2))) {
-      val ex = intercept[IllegalStateException](thunk())
-      assert(ex.getMessage.contains("did not converge"))
-      assert(spark.sharedState.cacheManager.isEmpty,
-        "the failure path must release caches too")
-    }
+    val cc2 = Dedup.connectedComponents(chain, 50).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cc2.values.toSet == Set(0L) && cc2.size == 7)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "operator must release every persisted generation")
+    // an iteration cap that would truncate the contraction must fail
+    // loudly, never return partial (wrong) labels
+    val ex = intercept[IllegalStateException](
+      Dedup.connectedComponents(chain, maxIters = 1))
+    assert(ex.getMessage.contains("did not converge"))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the failure path must release caches too")
   }
 
   test("star contraction converges in O(log n) rounds on a depth-200 chain") {

@@ -177,6 +177,37 @@ class PlanSpec extends AnyFunSuite {
       "hot buckets must stream, not materialize per-group:\n" + p.take(1500))
   }
 
+  test("x_quota_reset's clustered walk reuses the rn window's one (ip, endpoint) exchange") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // simulateClustered trusts its input to keep each (ip, endpoint)
+    // bucket in one partition; this is the plan shape that makes it so
+    val root = SparkEntry.queries("x_quota_reset")(spark, sf).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val walks = root.collect { case m: MapPartitionsExec => m }
+    assert(walks.size == 1, root.toString)
+    val exchanges = walks.head.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1,
+      "the walk's input must shuffle exactly once:\n" + walks.head.toString.take(3000))
+    exchanges.head.outputPartitioning match {
+      case HashPartitioning(keys, _) =>
+        assert(keys.collect { case a: Attribute => a.name } == Seq("ip", "endpoint"),
+          exchanges.head.toString.take(1500))
+      case other => fail(s"expected hashpartitioning(ip, endpoint), got $other")
+    }
+    // and that one exchange sits below the rn window: nothing between the
+    // window and the walk may re-shuffle
+    val window = walks.head.collectFirst { case w: WindowExec => w }
+    assert(window.exists(_.collect { case e: ShuffleExchangeExec => e }.size == 1),
+      "expected the exchange under the rn window:\n" + walks.head.toString.take(3000))
+  }
+
   test("library dedup/fingerprint operators carry no sort (ordering is the query layer's)") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
